@@ -285,9 +285,7 @@ class CrawlEngine:
         from crawler_pyspider_spark.functions.urls import INTERNAL_HOST
 
         self.politeness = politeness.unionByName(
-            spark.createDataFrame(
-                [(INTERNAL_HOST, 1e9, 1e9)], politeness.schema
-            )
+            FR.literal_frame(spark, politeness.schema, [(INTERNAL_HOST, 1e9, 1e9)])
         )
         self.store = SnapshotStore(spark, warehouse)
         # Per-project handler registry (the reference routes every task
@@ -443,7 +441,7 @@ class CrawlEngine:
         self._fr_delta: DataFrame = self._empty_delta()
         self._fr_delta_empty: bool = True  # known-empty → first fold skips upsert
         self._force_compact: bool = False
-        self.frontier: DataFrame = FR.empty_frontier(spark)
+        self.frontier: DataFrame = self._fr_base
         self.token_state: DataFrame = FR.empty_token_state(spark)
         self.pending: DataFrame | None = None  # follows + deferred for next epoch
         self._pending_rows: int | None = None  # known size of self.pending
@@ -468,7 +466,11 @@ class CrawlEngine:
     def _rebuild_view(self) -> None:
         """self.frontier = base ⊖ delta-keys ∪ live-delta.  The anti-join
         is a scan of the persisted base (AQE broadcasts the small delta
-        key set); tombstoned keys (_live=false) simply don't come back."""
+        key set); tombstoned keys (_live=false) simply don't come back.
+        A known-empty delta leaves the view the base itself."""
+        if self._fr_delta_empty:
+            self.frontier = self._fr_base
+            return
         base_kept = self._fr_base.join(
             self._fr_delta.select("project", "taskid"),
             ["project", "taskid"],
@@ -478,7 +480,7 @@ class CrawlEngine:
             self._fr_delta.filter(F.col("_live")).drop("_live")
         )
 
-    def _apply_changes(self, changes: DataFrame, caches: list) -> None:
+    def _apply_changes(self, changes: DataFrame | list) -> None:
         """Fold change rows (FRONTIER_COLS, unique per key) into the
         delta — an upsert over O(delta) rows, never over the base.
 
@@ -525,7 +527,7 @@ class CrawlEngine:
         self._fr_delta_empty = False
         self._rebuild_view()
 
-    def _drop_keys(self, keys: DataFrame, caches: list) -> None:
+    def _drop_keys(self, keys: DataFrame) -> None:
         """Delete (project, taskid) keys from the frontier via delta
         tombstones (the MoR equivalent of the reference's taskdb row
         deletes for ephemeral control tasks).  A later re-insert of the
@@ -563,6 +565,27 @@ class CrawlEngine:
         self._fr_delta = self._empty_delta()
         self._fr_delta_empty = True
         self._rebuild_view()
+
+    def _fold_outcomes(self, selected: DataFrame, statuses: DataFrame, now: float) -> None:
+        """ONE eager fold for the whole epoch tail: lease stamps (W4)
+        shadowed per key by the fetch/process outcomes.  The lease rows
+        only survive for keys with no status row — none by construction
+        today, but the layered upsert keeps the invariant explicit (an
+        async fetcher stage would rely on it).  delta + lease + status
+        resolve in a single max_by shuffle inside the one delta
+        materialization.
+
+        The status rows resolve against the select batch, not the
+        frontier view: every status key is a selected key and
+        ``selected`` carries that key's frontier row (the lease stamp
+        is the only column it changes, and ``status_changes`` clears
+        it), so the fold never scans base ⊖ delta."""
+        self._apply_changes(
+            [
+                selected.select(*FR.FRONTIER_COLS),
+                FR.status_changes(selected, statuses, now),
+            ]
+        )
 
     # -- seeding -----------------------------------------------------------
     def seed(self, seeds: DataFrame, callback: str = "index_page") -> None:
@@ -717,14 +740,27 @@ class CrawlEngine:
         self._fire_on_finished = False
         if not rows:
             return None
-        return self.spark.createDataFrame(
-            rows,
+        return FR.literal_frame(
+            self.spark,
             "url string, project string, priority int, exetime double,"
             " callback string, seq long",
+            rows,
         )
 
     # -- projectdb dim (S5, scheduler.py:120-125,207-247,298-316) -----------
     ACTIVE_PROJECT_STATUSES = ("RUNNING", "DEBUG")  # projectdb.py:14-22
+
+    def _project_policy(self) -> DataFrame:
+        """Per-project rate/burst (projectdb.py:21-22) in the politeness
+        frame shape (key, rate, burst)."""
+        return FR.literal_frame(
+            self.spark,
+            "key string, rate double, burst double",
+            [
+                (p, float(v.get("rate", 1.0)), float(v.get("burst", 10.0)))
+                for p, v in self._projects.items()
+            ],
+        )
 
     def _active_projects(self) -> list[str] | None:
         if self._projects is None:
@@ -801,7 +837,7 @@ class CrawlEngine:
                 n_shards=self.seen_shards_n,
                 buckets=self.seen_buckets,
             )
-        self._drop_keys(keys, self._extra_caches)
+        self._drop_keys(keys)
         self._force_compact = True
         if self.pending is not None:
             self.pending = self.pending.filter(F.col("project") != name)
@@ -931,12 +967,18 @@ class CrawlEngine:
                 # non-active projects reject the arrival — a JVM-side
                 # isin predicate over the dim list, no join, no shuffle
                 inc = inc.filter(F.col("project").isin(active))
-            # cache the canonicalized batch: the merge, the deferred
-            # split, and (bloom mode) the probe all read it — without
-            # the cache, writing the frontier and pending snapshots
-            # re-runs the canonicalize UDF + dedup over the whole batch
-            inc = inc.cache()
-            caches.append(inc)
+            # checkpoint the canonicalized batch: the merge, the
+            # deferred split, and (filter tiers) the probe all read it —
+            # unmaterialized, writing the frontier and pending snapshots
+            # re-runs the canonicalize UDF + dedup over the whole batch.
+            # localCheckpoint, not cache: later plans start from this
+            # leaf instead of nesting the canonicalize plan.  The eager
+            # checkpoint runs the canonicalize UDF + dedup NOW, so
+            # t_ingest starts before it (lazy, the work re-billed to
+            # whatever action fired first — "t_select" in the round-3
+            # scaling profile).
+            _t = _time.monotonic()
+            inc = inc.localCheckpoint(eager=True)
             if self.seen_shards is not None:
                 # bloom pre-filter: ONE cogroup pass probes + inserts;
                 # bloom-positive rows go through the exact decision
@@ -983,19 +1025,16 @@ class CrawlEngine:
             # commit's footer row count decides next epoch, so no
             # isEmpty/count jobs here
             self.pending = deferred
-            _t = _time.monotonic()
             # accepted arrivals fold into the MoR delta — O(changes),
-            # never a re-aggregation of the whole frontier.  The fold's
-            # eager checkpoint runs the canonicalize UDF + dedup + merge
-            # join NOW, so t_ingest stays honest (lazy, it re-billed to
-            # whatever action fired first — "t_select" in the round-3
-            # scaling profile).  ``ingested`` stays the RAW pending size
-            # (the work the engine was asked to schedule), not the
-            # post-dedup distinct count.
-            self._apply_changes(changes, caches)
-            n_inc = inc.count()
+            # never a re-aggregation of the whole frontier.
+            # ``ingested`` stays the RAW pending size (the work the
+            # engine was asked to schedule), not the post-dedup
+            # distinct count; the batch is counted only when the
+            # committed pending size is unknown (after seed / enqueue /
+            # control rows).
+            self._apply_changes(changes)
             m["ingested"] = (
-                self._pending_rows if self._pending_rows is not None else n_inc
+                self._pending_rows if self._pending_rows is not None else inc.count()
             )
             m["t_ingest"] = round(_time.monotonic() - _t, 2)
         else:
@@ -1014,13 +1053,7 @@ class CrawlEngine:
             # per-project rate/burst token bucket (projectdb.py:21-22,
             # scheduler.py:506-536) through the SAME budget operator the
             # per-host politeness uses — dim-sized frames throughout
-            prows = [
-                (p, float(v.get("rate", 1.0)), float(v.get("burst", 10.0)))
-                for p, v in self._projects.items()
-            ]
-            ppol = self.spark.createDataFrame(
-                prows, "key string, rate double, burst double"
-            )
+            ppol = self._project_policy()
             proj_bucket = FR.host_budgets(
                 ppol.select(F.col("key").alias("host")),
                 self.project_token_state,
@@ -1048,7 +1081,7 @@ class CrawlEngine:
             if self._frontier_rows is not None
             else None
         )
-        selected, used = FR.select_batch(
+        selected, budgets = FR.select_rows(
             select_src,
             self.token_state,
             self.politeness,
@@ -1060,20 +1093,22 @@ class CrawlEngine:
             n_projects=nproj_hint,
             total_ready=total_hint,
         )
-        selected = selected.cache()
-        caches.append(selected)
+        # Cut the lineage here: fetch, process, the status fold and the
+        # token-state commit all start from the checkpointed batch
+        # instead of nesting the select plan (and through it the
+        # frontier view).  AQE runs the select's shuffle stages inside
+        # the eager checkpoint, so the timer starts before it.
         _t = _time.monotonic()
+        selected = selected.localCheckpoint(eager=True)
         n_selected = selected.count()
         m["t_select"] = round(_time.monotonic() - _t, 2)
         m["selected"] = n_selected
-        self.token_state = FR.update_token_state(self.token_state, used, now)
+        self.token_state = FR.update_token_state(
+            self.token_state, FR.budgets_used(selected, budgets), now
+        )
         if proj_bucket is not None:
-            used_p = (
-                selected.groupBy(F.col("project").alias("host"))
-                .agg(F.count("*").alias("n_selected"))
-                .join(proj_bucket, "host", "right")
-                .withColumn("n_selected", F.coalesce(F.col("n_selected"), F.lit(0)))
-                .select("host", "n_selected", "tokens_avail", "rate", "burst")
+            used_p = FR.budgets_used(
+                selected.select(F.col("project").alias("host")), proj_bucket
             )
             self.project_token_state = FR.update_token_state(
                 self.project_token_state, used_p, now
@@ -1318,9 +1353,11 @@ class CrawlEngine:
                     .withColumn("_result", F.lit(None).cast("string"))
                     .drop("_p_html", "_parsed", "_p_status")
                 )
-            ok = ok.cache()
-            caches.append(ok)
+            # every later consumer (statuses, results, follows, the
+            # missing anti-join) starts from this checkpoint; the fetch
+            # join and parse UDF run inside it, so the timer starts first
             _t = _time.monotonic()
+            ok = ok.localCheckpoint(eager=True)
             aggs = [
                 F.count("*").alias("n"),
                 F.coalesce(F.sum(F.col("_fetch_ok").cast("int")), F.lit(0)).alias("n_ok"),
@@ -1481,25 +1518,10 @@ class CrawlEngine:
                     "project", "taskid"
                 )
                 statuses = statuses.filter(~nss_pred)
-            # ONE eager fold for the whole epoch tail: lease stamps (W4)
-            # shadowed per-key by the fetch/process outcomes.  The lease
-            # rows only survive for keys with no status row — none by
-            # construction today, but the layered upsert keeps the
-            # invariant explicit (an async fetcher stage would rely on
-            # it).  delta + lease + status resolve in a single max_by
-            # shuffle inside the one delta materialization.
             _t = _time.monotonic()
-            self._apply_changes(
-                [
-                    selected.select(*FR.FRONTIER_COLS),
-                    FR.status_changes(
-                        self.frontier, statuses.drop("callback"), now
-                    ),
-                ],
-                caches,
-            )
+            self._fold_outcomes(selected, statuses.drop("callback"), now)
             if drop_keys is not None:
-                self._drop_keys(drop_keys, caches)
+                self._drop_keys(drop_keys)
             m["t_status_fold"] = round(_time.monotonic() - _t, 2)
             _t = _time.monotonic()
             m["robots_denied"] = denied.count()
@@ -1524,13 +1546,16 @@ class CrawlEngine:
         # outgrown its threshold — so steady-state epochs commit
         # O(touched tasks), not O(frontier).
         _t = _time.monotonic()
-        drow = self._fr_delta.agg(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.sum(F.col("_live").cast("int")), F.lit(0)
-            ).alias("n_live"),
-        ).collect()[0]  # checkpointed — one cheap O(delta) job
-        delta_rows, delta_live = int(drow["n"]), int(drow["n_live"])
+        if self._fr_delta_empty:
+            delta_rows = delta_live = 0
+        else:
+            drow = self._fr_delta.agg(
+                F.count("*").alias("n"),
+                F.coalesce(
+                    F.sum(F.col("_live").cast("int")), F.lit(0)
+                ).alias("n_live"),
+            ).collect()[0]  # checkpointed — one cheap O(delta) job
+            delta_rows, delta_live = int(drow["n"]), int(drow["n_live"])
         # Compaction cost is O(base), so the policy gates on BASE size:
         # a frontier at or below ``frontier_compact_min_rows`` always
         # compacts (rewriting a small base costs less than the delta
@@ -1649,6 +1674,10 @@ class CrawlEngine:
             self.pending = None
             self._pending_rows = 0
 
+        # The epoch's local checkpoints (inc, selected, ok and the delta
+        # folds) have no unpersist handle in the DataFrame API: the
+        # ContextCleaner frees their blocks once the JVM collects the
+        # dropped frames.  Only the cached frames are released here.
         for c in caches:
             c.unpersist()
         m["t_reload"] = round(_time.monotonic() - _t, 2)

@@ -84,7 +84,12 @@ def encode_multipart_formdata(
     ``(filename, content, content_type, extra_headers)``; when no
     content type is given it is guessed from the filename.
     ``boundary`` pins the delimiter for deterministic tests; the
-    default is fresh entropy per call."""
+    default is fresh entropy per call.
+
+    Field names, filenames and extra header names and values are
+    written into part headers verbatim, so a ``"``, CR or LF in any of
+    them (CR or LF in a content type) raises ValueError instead of
+    ending the quoted parameter or injecting a header line."""
     import secrets
 
     if boundary is None:
@@ -93,6 +98,12 @@ def encode_multipart_formdata(
 
     def _b(v) -> bytes:
         return v if isinstance(v, bytes) else str(v).encode("utf-8")
+
+    def _safe(v, what: str, forbidden: str = '"\r\n') -> str:
+        v = str(v)
+        if any(ch in v for ch in forbidden):
+            raise ValueError(f"multipart {what} contains {forbidden!r}: {v!r}")
+        return v
 
     def _part(headers: list[str], content) -> None:
         chunks.append(b"--" + boundary.encode("ascii"))
@@ -105,7 +116,7 @@ def encode_multipart_formdata(
         for v in val if isinstance(val, (list, tuple)) else [val]:
             if v is None:
                 continue
-            _part([f'Content-Disposition: form-data; name="{key}"'], v)
+            _part([f'Content-Disposition: form-data; name="{_safe(key, "field name")}"'], v)
 
     fitems = files.items() if isinstance(files, dict) else list(files or [])
     for key, val in fitems:
@@ -118,14 +129,18 @@ def encode_multipart_formdata(
                 fn, content, ctype = val
             else:
                 fn, content, ctype, extra = val[:4]
-                extra_hdrs = [f"{hk}: {hv}" for hk, hv in (extra or {}).items()]
+                extra_hdrs = [
+                    f"{_safe(hk, 'header name')}: {_safe(hv, 'header value')}"
+                    for hk, hv in (extra or {}).items()
+                ]
         else:
             fn, content, ctype = key, val, get_content_type(key)
         hdrs = [
-            f'Content-Disposition: form-data; name="{key}"; filename="{fn}"'
+            f'Content-Disposition: form-data; name="{_safe(key, "field name")}";'
+            f' filename="{_safe(fn, "filename")}"'
         ]
         if ctype:
-            hdrs.append(f"Content-Type: {ctype}")
+            hdrs.append("Content-Type: " + _safe(ctype, "content type", "\r\n"))
         hdrs.extend(extra_hdrs)
         _part(hdrs, content)
 

@@ -180,6 +180,89 @@ def _encode_stash(b: np.ndarray, fp: np.ndarray) -> bytes:
     return out.tobytes()
 
 
+def _probe_shard(
+    shard: int,
+    left: pd.DataFrame,
+    right: pd.DataFrame,
+    payload_cols: list[str],
+    buckets: int,
+) -> pd.DataFrame:
+    """The ``probe_combined`` cogroup body for one shard: ``left`` holds
+    the shard's key rows (payload columns + ``_h1``/``_h2``), ``right``
+    its stored filter row, if any.  Returns the key rows flagged
+    ``seen`` followed by ONE shard row carrying the updated filter —
+    payload columns null on the shard row, filter columns null on the
+    key rows."""
+    if len(right):
+        table = (
+            np.frombuffer(right["table"].iloc[0], dtype=np.uint16)
+            .reshape(buckets, SLOTS)
+            .copy()
+        )
+        st_b, st_fp = _decode_stash(right["stash"].iloc[0])
+        n_items = int(right["n_items"].iloc[0])
+    else:
+        table = np.zeros((buckets, SLOTS), dtype=np.uint16)
+        st_b = np.zeros(0, dtype=np.int64)
+        st_fp = np.zeros(0, dtype=np.uint16)
+        n_items = 0
+    st_b_l = list(st_b)
+    st_fp_l = list(st_fp)
+    seen_flags = np.ones(len(left), dtype=bool)
+    if len(left):
+        h1 = left["_h1"].to_numpy()
+        h2 = left["_h2"].to_numpy()
+        keys = np.stack([h1, h2], axis=1)
+        _, first_idx = np.unique(keys, axis=0, return_index=True)
+        fp, i1, i2 = _fp_and_buckets(h2[first_idx], buckets)
+        # vectorized probe: both candidate buckets + stash
+        present = (table[i1] == fp[:, None]).any(axis=1) | (
+            table[i2] == fp[:, None]
+        ).any(axis=1)
+        if len(st_b):
+            present |= (
+                (st_fp[None, :] == fp[:, None])
+                & ((st_b[None, :] == i1[:, None]) | (st_b[None, :] == i2[:, None]))
+            ).any(axis=1)
+        novel = ~present
+        if novel.any():
+            nf, n1, n2 = fp[novel], i1[novel], i2[novel]
+            placed = _place_free(table, nf, n1)
+            placed[~placed] = _place_free(table, nf[~placed], n2[~placed])
+            for j in np.flatnonzero(~placed):
+                if not _kick_insert(table, int(nf[j]), int(n1[j]), buckets):
+                    # bounded eviction failed — stash, never drop
+                    # (preserves the no-false-negative guarantee)
+                    st_b_l.append(int(n1[j]))
+                    st_fp_l.append(int(nf[j]))
+            n_items += int(novel.sum())
+        seen_flags[first_idx[novel]] = False
+    # One frame, no concat of an all-null row: every column is built
+    # full-length with the shard row appended by reindex, so no all-NA
+    # block takes part in choosing a dtype.  Int and bool columns are
+    # object first, so the shard row's null keeps their values exact.
+    n = len(left)
+    urls = (
+        left[payload_cols].reset_index(drop=True)
+        if n
+        else pd.DataFrame(columns=payload_cols)
+    )
+    out = urls.astype(
+        {c: object for c in payload_cols if urls[c].dtype.kind in "biu"}
+    ).reindex(range(n + 1))
+    out.loc[n, "shard"] = shard
+    out["seen"] = [*seen_flags.tolist(), None]
+    out["table"] = [None] * n + [table.tobytes()]
+    out["stash"] = [None] * n + [
+        _encode_stash(
+            np.asarray(st_b_l, dtype=np.int64),
+            np.asarray(st_fp_l, dtype=np.uint16),
+        )
+    ]
+    out["n_items"] = pd.Series([None] * n + [n_items], dtype=object)
+    return out
+
+
 def probe_combined(
     urls: DataFrame,
     shards: DataFrame,
@@ -212,73 +295,9 @@ def probe_combined(
         ]
     )
     payload_cols = [f.name for f in out_fields]
-    nbytes = buckets * SLOTS * 2
 
     def fn(key: tuple, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if len(right):
-            table = (
-                np.frombuffer(right["table"].iloc[0], dtype=np.uint16)
-                .reshape(buckets, SLOTS)
-                .copy()
-            )
-            st_b, st_fp = _decode_stash(right["stash"].iloc[0])
-            n_items = int(right["n_items"].iloc[0])
-        else:
-            table = np.zeros((buckets, SLOTS), dtype=np.uint16)
-            st_b = np.zeros(0, dtype=np.int64)
-            st_fp = np.zeros(0, dtype=np.uint16)
-            n_items = 0
-        st_b_l = list(st_b)
-        st_fp_l = list(st_fp)
-        rows = []
-        if len(left):
-            h1 = left["_h1"].to_numpy()
-            h2 = left["_h2"].to_numpy()
-            keys = np.stack([h1, h2], axis=1)
-            _, first_idx = np.unique(keys, axis=0, return_index=True)
-            fp, i1, i2 = _fp_and_buckets(h2[first_idx], buckets)
-            # vectorized probe: both candidate buckets + stash
-            present = (table[i1] == fp[:, None]).any(axis=1) | (
-                table[i2] == fp[:, None]
-            ).any(axis=1)
-            if len(st_b):
-                present |= (
-                    (st_fp[None, :] == fp[:, None])
-                    & ((st_b[None, :] == i1[:, None]) | (st_b[None, :] == i2[:, None]))
-                ).any(axis=1)
-            novel = ~present
-            if novel.any():
-                nf, n1, n2 = fp[novel], i1[novel], i2[novel]
-                placed = _place_free(table, nf, n1)
-                placed[~placed] = _place_free(table, nf[~placed], n2[~placed])
-                for j in np.flatnonzero(~placed):
-                    if not _kick_insert(table, int(nf[j]), int(n1[j]), buckets):
-                        # bounded eviction failed — stash, never drop
-                        # (preserves the no-false-negative guarantee)
-                        st_b_l.append(int(n1[j]))
-                        st_fp_l.append(int(nf[j]))
-                n_items += int(novel.sum())
-            seen_flags = np.ones(len(left), dtype=bool)
-            seen_flags[first_idx[novel]] = False
-            url_out = left[payload_cols].copy()
-            url_out["seen"] = seen_flags
-            url_out["table"] = None
-            url_out["stash"] = None
-            url_out["n_items"] = None
-            rows.append(url_out)
-        shard_row = {c: [None] for c in payload_cols}
-        shard_row["shard"] = [key[0]]
-        shard_row["seen"] = [None]
-        shard_row["table"] = [table.tobytes()]
-        shard_row["stash"] = [
-            _encode_stash(
-                np.asarray(st_b_l, dtype=np.int64),
-                np.asarray(st_fp_l, dtype=np.uint16),
-            )
-        ]
-        shard_row["n_items"] = [n_items]
-        rows.append(pd.DataFrame(shard_row))
-        return pd.concat(rows, ignore_index=True)
+        return _probe_shard(key[0], left, right, payload_cols, buckets)
 
     return (
         urls_h.groupby("shard")

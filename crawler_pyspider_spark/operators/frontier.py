@@ -54,6 +54,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StructType
 
 # status enum — database/base/taskdb.py:59-63
 ACTIVE, SUCCESS, FAILED, BAD = 1, 2, 3, 4
@@ -91,8 +92,27 @@ FRONTIER_SCHEMA = (
 )
 
 
+def literal_frame(spark, schema: StructType | str, rows=()) -> DataFrame:
+    """A constant frame built on the JVM: ``inline`` over one array
+    literal on a one-row ``range``.  ``createDataFrame(list)`` would
+    instead pickle the rows into a Python RDD that every plan reading
+    the frame re-runs in Python workers, even for zero rows.  The cast
+    to ``array<schema>`` fixes names, types and nullability exactly as
+    the ``schema`` (StructType or DDL string) declares them."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    structs = [
+        F.struct(
+            *[F.lit(v).cast(f.dataType).alias(f.name) for v, f in zip(r, schema.fields)]
+        )
+        for r in rows
+    ]
+    arr = F.array(*structs).cast(ArrayType(schema, containsNull=False))
+    return spark.range(1, numPartitions=1).select(F.inline(arr))
+
+
 def empty_frontier(spark) -> DataFrame:
-    return spark.createDataFrame([], FRONTIER_SCHEMA)
+    return literal_frame(spark, FRONTIER_SCHEMA)
 
 
 def normalize_incoming(incoming: DataFrame, now: float) -> DataFrame:
@@ -412,7 +432,7 @@ def host_budgets(
     )
 
 
-def select_batch(
+def select_rows(
     frontier: DataFrame,
     token_state: DataFrame,
     politeness: DataFrame,
@@ -445,9 +465,10 @@ def select_batch(
     projectdb.py:21-22) — caps each project's selects on top of the
     fairness quota when provided.
 
-    Returns (selected, budgets_used) where selected carries the fetch
-    lease (exetime = now + 600 — task_queue.py:227-242) and
-    budgets_used = (host, n_selected, tokens_avail, rate, burst) for the
+    Returns (selected, budgets) where selected carries the fetch lease
+    (exetime = now + 600 — task_queue.py:227-242) and budgets =
+    (host, tokens_avail, rate, burst, budget) per host with ready rows;
+    ``select_batch`` turns them into ``budgets_used`` for the
     token-state update.
 
     ``n_projects`` / ``total_ready`` are driver-known HINTS that skip
@@ -459,7 +480,9 @@ def select_batch(
     only costs an unnecessary sort-limit (correctness unaffected), but
     an UNDERestimate ≤ ``loop_limit`` would skip the global cap and let
     the batch silently exceed it.  ``None`` falls back to computing the
-    exact sizes.
+    exact sizes.  A caller that materializes ``selected`` derives
+    ``budgets_used`` from the materialized batch, so the token-state
+    update does not re-run the select plan.
     """
     ready = frontier.filter(ready_filter(now))
 
@@ -567,15 +590,25 @@ def select_batch(
     selected = capped.select(*FRONTIER_COLS).withColumn(
         "lease_expires", F.lit(float(now + LEASE_SECONDS))
     )
+    return selected, budgets
 
-    used = (
+
+def select_batch(*args, **kwargs) -> tuple[DataFrame, DataFrame]:
+    """``select_rows`` followed by ``budgets_used``: (selected, used)."""
+    selected, budgets = select_rows(*args, **kwargs)
+    return selected, budgets_used(selected, budgets)
+
+
+def budgets_used(selected: DataFrame, budgets: DataFrame) -> DataFrame:
+    """(host, n_selected, tokens_avail, rate, burst) for every budgeted
+    host — the token-state update input."""
+    return (
         selected.groupBy("host")
         .agg(F.count("*").alias("n_selected"))
         .join(budgets, "host", "right")
         .withColumn("n_selected", F.coalesce(F.col("n_selected"), F.lit(0)))
         .select("host", "n_selected", "tokens_avail", "rate", "burst")
     )
-    return selected, used
 
 
 def project_quotas(qsizes: DataFrame, total: int, loop_limit: int) -> DataFrame:
@@ -632,7 +665,7 @@ def update_token_state(token_state: DataFrame, used: DataFrame, now: float) -> D
 
 
 def empty_token_state(spark) -> DataFrame:
-    return spark.createDataFrame([], "host string, tokens double, last_update double")
+    return literal_frame(spark, "host string, tokens double, last_update double")
 
 
 def with_global_rank(

@@ -9,7 +9,11 @@ here is chosen so the *same* code runs unchanged under
 - ``spark.sql.shuffle.partitions`` proportional to cores (a real
   deployment sets it ~2-3x total executor cores).
 - Arrow enabled: every Python-side transform in this engine is a
-  vectorized pandas UDF (no per-row Python anywhere).
+  vectorized pandas UDF — the canonicalize, seen-filter and parse
+  steps.  No epoch plan reads a driver-pickled frame: constant frames
+  are built on the JVM (``frontier.literal_frame``), never with
+  ``createDataFrame(list)``, whose Python RDD every plan reading it
+  would re-run in Python workers.
 """
 
 from __future__ import annotations

@@ -8,15 +8,25 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from crawler_pyspider_spark.session import get_spark  # noqa: E402
 
 
+def _driver_mem() -> str:
+    """40% of MemTotal, clamped to 2-24 GiB.  The rest of the host is
+    room for the JVM's off-heap memory and the Python workers (the heap
+    must never exceed the host: a 24g heap on a 16 GB host was OOM-killed
+    mid-suite, failing every later test)."""
+    with open("/proc/meminfo") as f:
+        total_kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    return f"{max(2048, min(24 * 1024, total_kb * 2 // 5 // 1024))}m"
+
+
 @pytest.fixture(scope="session")
 def spark():
     # One JVM serves the whole suite (100+ tests): broadcast relations,
     # cached plans and codegen classes accumulate heap across tests, and
     # the default 8g driver was measured to die mid-suite with "Not
     # enough memory to build and broadcast" — taking every later test
-    # down with ConnectionRefused.  The box has 128 GiB; give the test
-    # driver headroom.
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
+    # down with ConnectionRefused.  Give the driver as much heap as the
+    # host can spare; SPARK_GRAFT_DRIVER_MEM overrides.
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", _driver_mem())
     s = get_spark(app_name="tests", cores=4, shuffle_partitions=4)
     yield s
     s.stop()

@@ -213,3 +213,29 @@ def test_result_dump_json_txt_csv(spark, small_world, tmp_path):
     csv = spark.read.option("header", True).csv(str(tmp_path / "out_csv"))
     assert csv.count() == n
     assert set(csv.columns) == {"url", "title", "r_url", "others"}
+
+
+@pytest.mark.parametrize(
+    "fields,files",
+    [
+        ({'a"; filename="x': "1"}, None),
+        ({"a\r\nX-Injected: 1": "1"}, None),
+        (None, {"f": ('r.txt"\r\nX-Injected: 1', b"x")}),
+        (None, {"f": ("r\n.txt", b"x")}),
+        (None, {'f"': ("r.txt", b"x")}),
+        (None, {"f": ("r.txt", b"x", "text/plain\r\nX-Injected: 1")}),
+        (None, {"f": ("r.txt", b"x", "text/plain", {"X-A\r\nX-B": "1"})}),
+        (None, {"f": ("r.txt", b"x", "text/plain", {"X-A": "1\r\nX-B: 2"})}),
+        (None, {"f": ("r.txt", b"x", "text/plain", {"X-A": 'q"'})}),
+    ],
+)
+def test_encode_multipart_rejects_header_injection(fields, files):
+    """A quote, CR or LF in a field name, filename or extra header (CR
+    or LF in a content type) would end the quoted parameter or start a
+    new header line; the encoder refuses it."""
+    from crawler_pyspider_spark.functions.crawl_api import (
+        encode_multipart_formdata,
+    )
+
+    with pytest.raises(ValueError):
+        encode_multipart_formdata(fields, files, boundary="BND")

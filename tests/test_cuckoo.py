@@ -230,3 +230,42 @@ def test_engine_delete_project_forgets_cuckoo_keys(spark, small_world, tmp_path)
     assert m["selected"] > 0
     assert m["frontier_compacted"]
     assert eng.frontier.filter(F.col("project") == "bench").count() > 0
+
+
+def test_probe_shard_builds_output_without_all_na_concat():
+    """The cogroup body must not concatenate an all-NA frame: pandas
+    warns (FutureWarning) that such a concat will change the result
+    dtypes.  Int payloads stay exact beside the shard row's nulls."""
+    import warnings
+
+    import pandas as pd
+
+    rng = np.random.RandomState(3)
+    n = 40
+    left = pd.DataFrame(
+        {
+            "taskid": [f"t{i}" for i in range(n)],
+            "seq": (np.arange(n, dtype=np.int64) + (1 << 60)),
+            "force_update": rng.rand(n) > 0.5,
+            "exetime": rng.rand(n),
+            "shard": np.full(n, 3, dtype=np.int32),
+            "_h1": rng.randint(-(2**62), 2**62, n),
+            "_h2": rng.randint(-(2**62), 2**62, n),
+        }
+    )
+    payload = ["taskid", "seq", "force_update", "exetime", "shard"]
+    filt = ["shard", "table", "stash", "n_items"]
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        first = cuckoo._probe_shard(3, left, pd.DataFrame(columns=filt), payload, BUCKETS)
+        shard_row = first.iloc[[-1]][filt].reset_index(drop=True)
+        again = cuckoo._probe_shard(3, left, shard_row, payload, BUCKETS)
+        only_shard = cuckoo._probe_shard(3, left.iloc[:0], shard_row, payload, BUCKETS)
+    for out in (first, again):
+        assert len(out) == n + 1
+        assert out["seq"].iloc[:n].tolist() == left["seq"].tolist()
+        assert out["seen"].iloc[n] is None and out["n_items"].iloc[n] == n
+        assert out["table"].iloc[:n].isna().all()
+    assert not first["seen"].iloc[:n].any()
+    assert again["seen"].iloc[:n].all()
+    assert len(only_shard) == 1 and only_shard["shard"].iloc[0] == 3

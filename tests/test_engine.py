@@ -314,3 +314,47 @@ def test_host_bucket_count_is_state_invariant(spark, small_world, tmp_path):
         eng.run(3)
         states[n] = sig(eng)
     assert states[3] == states[1024] and states[3]
+
+
+def test_lease_survives_fold_without_status_row(spark, small_world, tmp_path):
+    """The epoch-tail fold layers lease stamps under status rows per
+    key.  A selected key that gets no status row must keep its lease
+    through that fold (not selectable while leased) and become
+    selectable again once the lease expires."""
+    eng = CrawlEngine(
+        spark, small_world["pages"], small_world["robots"],
+        small_world["politeness"], str(tmp_path / "wh"), loop_limit=100000,
+    )
+    now = eng.now(0)
+    rows = spark.range(3).select(
+        F.concat(F.lit("t"), F.col("id").cast("string")).alias("taskid"),
+        F.lit("bench").alias("project"),
+        F.concat(F.lit("http://lease.test/p/"), F.col("id").cast("string")).alias("url"),
+        F.lit("lease.test").alias("host"),
+        F.lit(0).alias("host_bucket"),
+        F.col("id").alias("seq"),
+    )
+    eng._set_base(FR.normalize_incoming(rows, now - 1.0), 3, 0)
+
+    def select(at):
+        sel, _ = FR.select_batch(
+            eng.frontier, FR.empty_token_state(spark), eng.politeness, at
+        )
+        return sel
+
+    selected = select(now).localCheckpoint(eager=True)
+    assert sorted(r.taskid for r in selected.collect()) == ["t0", "t1", "t2"]
+    statuses = selected.filter(F.col("taskid") != "t2").select(
+        "project", "taskid", F.lit(True).alias("ok")
+    )
+    eng._fold_outcomes(selected, statuses, now)
+
+    got = {r.taskid: r for r in eng.frontier.collect()}
+    assert sorted(got) == ["t0", "t1", "t2"]
+    for tid in ("t0", "t1"):
+        assert got[tid].status == FR.SUCCESS and got[tid].lease_expires is None
+    assert got["t2"].status == FR.ACTIVE
+    assert got["t2"].lease_expires == now + FR.LEASE_SECONDS
+    # leased: not selectable until the lease runs out, then selectable
+    assert select(now + FR.LEASE_SECONDS - 1.0).count() == 0
+    assert [r.taskid for r in select(now + FR.LEASE_SECONDS).collect()] == ["t2"]
